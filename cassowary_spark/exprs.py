@@ -8,11 +8,15 @@ decimal-quantized like discounts/taxes — round differently. The
 floor(x·10ⁿ + 0.5)/10ⁿ form is the same IEEE op sequence in both
 engines, so identical inputs give bit-identical outputs. The oracle
 SQL spells the same formula inline.
+
+``literal_frame`` builds small constant frames on the JVM side.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from collections.abc import Iterable, Sequence
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -28,3 +32,27 @@ def sql_srnd(expr: str, n: int = 4) -> str:
     """The DuckDB-side spelling of ``srnd`` for oracle strings."""
     s = f"{float(10 ** n):.1f}"
     return f"floor(({expr}) * {s} + 0.5) / {s}"
+
+
+def literal_frame(
+    spark: SparkSession,
+    rows: Iterable[Sequence[object]],
+    cols: Sequence[tuple[str, str]],
+) -> DataFrame:
+    """A small constant frame (``cols`` = ``(name, type)`` pairs, one
+    per row field) as a JVM literal: ``inline(array(struct(...)))``
+    over ``spark.range(1)``. ``spark.createDataFrame`` on Python rows
+    plans a ``parallelize`` scan instead, so every read of it starts
+    Python-worker tasks."""
+    return spark.range(1).select(
+        F.inline(
+            F.array(
+                *(
+                    F.struct(
+                        *(F.lit(v).cast(t).alias(n) for v, (n, t) in zip(row, cols))
+                    )
+                    for row in rows
+                )
+            )
+        )
+    )

@@ -1,124 +1,107 @@
-"""Iterative graph traversal operators (frontier BFS).
+"""Iterative graph traversal operators (level-synchronous BFS).
 
 Complements ``operators/dedup.connected_components`` (min-label
 propagation): CC answers "which nodes belong together", BFS answers
-"how far apart are they". Same execution discipline — per-round work
-is all joins/groupBys on executors, the driver sees only a one-row
-emptiness probe per round, lineage is truncated periodically, and
-caches are released as soon as a round's frame is superseded.
+"how far apart are they".
+
+Invariants of ``bfs_level_sizes``:
+
+- One broadcast and one observed checkpoint job per round. The
+  frontier and the level before it are broadcast once, as one frame
+  tagged ``f`` (is-frontier), which serves both the frontier join and
+  the already-settled test; the new level's size is read from an
+  ``Observation`` on the eager checkpoint that materializes it, so no
+  separate count job runs.
+- The adjacency frame is hash-partitioned by ``t``, so collapsing the
+  frontier's neighbours to distinct ``t`` needs no exchange.
+- Between rounds at most two round checkpoints hold blocks (the
+  frontier and the level before it, the only ones the next round
+  reads); every one is released before the function returns.
+- The seed is a JVM-side ``spark.range`` frame: no round scans a
+  Python-backed frame. The caller gets plain integers back, so no
+  result depends on a cache surviving.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
-def bfs_distances(
-    edges: DataFrame,
-    src_col: str = "x",
-    dst_col: str = "y",
-    source: int | None = None,
-    max_hops: int = 20,
-    symmetric: bool = False,
-) -> DataFrame:
-    """Single-source hop distances over an undirected edge list →
-    ``(node, dist)`` for every node within ``max_hops`` of the source
-    (the source itself at dist 0). Unreached nodes are absent.
+def _release(checkpoint: DataFrame) -> None:
+    """Drop a local checkpoint's blocks. ``DataFrame.unpersist`` does
+    nothing for a checkpoint: its data is the RDD behind the plan's
+    ``LogicalRDD`` leaf."""
+    checkpoint._jdf.logicalPlan().rdd().unpersist(False)
 
-    Frontier BFS (Pregel-style): round i joins the current frontier
-    to the adjacency list, anti-joins already-settled nodes, and
-    settles the survivors at dist i. Each edge is traversed at most
-    twice overall (once per direction) ACROSS ALL ROUNDS — the
-    frontier shrinks to the unsettled boundary, unlike a naive
-    "re-relax everything" loop whose round cost stays |E|. The
-    driver orchestrates (one ``limit(1).count()`` emptiness probe
-    per round) but never holds node data.
 
-    ``source=None`` picks the minimum node id in the edge set — a
-    deterministic default that needs one 1-row reduce.
+def bfs_level_sizes(
+    sym: DataFrame, source: int | None, n_nodes: int, max_hops: int = 20
+) -> list[int]:
+    """Single-source BFS over an undirected graph → level sizes:
+    element ``k - 1`` is the number of nodes at hop distance ``k``
+    from ``source``. The list stops before the first empty level and
+    holds at most ``max_hops`` elements (the contract "distance, if
+    ≤ max_hops", which a bounded recursive-CTE oracle can express; a
+    100 TB graph with a larger diameter wants a landmark index, not
+    more BFS rounds).
 
-    ``max_hops`` caps the rounds: the result is then "distance, if
-    ≤ max_hops" — the same contract a bounded recursive-CTE oracle
-    can express, and the right contract at scale anyway (a 100 TB
-    graph with diameter beyond ~20 wants large-star/small-star CC or
-    a landmark index, not more BFS rounds).
+    ``sym`` is the symmetric adjacency ``(s long, t long)`` (every edge
+    in both directions), ``repartition("t")``-ed and persisted by the
+    caller, who also unpersists it. ``source`` is a node of ``sym`` and
+    ``n_nodes`` its node count; once ``n_nodes`` are settled the next
+    level is known to be empty and is not run. An empty edge set
+    (``n_nodes == 0``, so no source) raises ``ValueError``.
+
+    Round k joins ``sym`` to the broadcast ``seen`` (levels k-1 and
+    k-2) on ``s``, keeps the ``t`` with a frontier neighbour, and
+    drops the ``t`` already in ``seen``. On an undirected graph a
+    neighbour of level k-1 lies at level k-2, k-1 or k, so the last
+    two levels suffice: the broadcast is frontier-bounded, never
+    O(settled), and each edge is traversed at most twice overall.
     """
-    if symmetric:
-        # caller hands an ALREADY-SYMMETRIZED, already-persisted edge
-        # frame (e.g. it computed degrees/hub from the same frame —
-        # one materialization instead of two); this function takes
-        # ownership and unpersists it when the loop is done.
-        sym = edges.select(
-            F.col(src_col).cast("long").alias("s"),
-            F.col(dst_col).cast("long").alias("t"),
+    if n_nodes == 0:
+        raise ValueError(
+            "bfs_level_sizes: edge set is empty — no source node "
+            "(pass a node of the edge set)"
         )
-    else:
-        sym = edges.select(
-            F.col(src_col).cast("long").alias("s"),
-            F.col(dst_col).cast("long").alias("t"),
-        )
-        sym = sym.union(
-            sym.select(F.col("t").alias("s"), F.col("s").alias("t"))
-        ).persist()
-    owned = edges if symmetric else sym
-    if source is None:
-        source = sym.agg(F.min("s")).collect()[0][0]
-        if source is None:
-            owned.unpersist()
-            raise ValueError(
-                "bfs_distances: edge set is empty — no default source "
-                "to pick (pass an explicit `source` for a known node)"
+    spark = sym.sparkSession
+    frontier = spark.range(1).select(F.lit(source).cast("long").alias("node"))
+    prev = frontier.limit(0)
+    live: list[DataFrame] = []  # round checkpoints, oldest first
+    sizes: list[int] = []
+    try:
+        for _ in range(max_hops):
+            seen = F.broadcast(
+                frontier.select("node", F.lit(True).alias("f")).unionByName(
+                    prev.select("node", F.lit(False).alias("f"))
+                )
             )
-    spark = edges.sparkSession
-    dist = spark.createDataFrame(
-        [(int(source), 0)], "node long, dist int"
-    )
-    frontier = dist
-    prev = spark.createDataFrame([], "node long, dist int")
-    for hop in range(1, max_hops + 1):
-        # localCheckpoint each round's frontier BEFORE it enters the
-        # next round: round k's plan otherwise embeds every previous
-        # round's union+anti-join, and the plan tree grows until the
-        # driver OOMs just rendering it (hit in practice at hop ~8 on
-        # a dense graph). Eager checkpoint = one small materialized
-        # frontier per round, constant-size plans forever.
-        #
-        # The anti-join dedups against the LAST TWO frontiers only,
-        # not the whole settled set: the graph is symmetrized, and on
-        # an undirected graph a neighbor of a dist-(k-1) node has
-        # distance k-2, k-1, or k — nothing older is ever reachable
-        # in one hop. Both broadcasts are therefore FRONTIER-bounded
-        # (constant-ish per round), never O(settled) → the loop has
-        # no growing broadcast to outgrow an executor. On a graph
-        # whose single frontier outgrows broadcast, drop the hints
-        # and pre-bucket sym by s instead.
-        seen = frontier.unionByName(prev).select("node")
-        nxt = (
-            sym.join(F.broadcast(frontier), sym.s == frontier.node)
-            .select(F.col("t").alias("node"))
-            .distinct()
-            .join(F.broadcast(seen), "node", "left_anti")
-            .select("node", F.lit(hop).cast("int").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-        # ONE job per round: the full count() both materializes the
-        # lazily-marked checkpoint (every partition computed → every
-        # block lands) and returns the emptiness signal — the eager
-        # checkpoint + separate limit(1).count() probe paid two jobs
-        # per round for the same information. (The r12 rejection of
-        # "lazy + count" used limit(1) as the materializer, which
-        # computes only one partition and leaves the rest to recompute
-        # later; a FULL count has no such hole — re-measured r15:
-        # 5.86 → 5.46 s warm, 16.6 → 10.1 s cold-plan at sf0.1.)
-        if nxt.count() == 0:
-            break
-        # dist stays a UNION of the checkpointed round frontiers — a
-        # linear plan over materialized leaves. Checkpointing dist
-        # itself every round re-materializes the whole settled set
-        # (O(V) per round → quadratic total); the union form keeps
-        # per-round work proportional to the frontier.
-        dist = dist.unionByName(nxt)
-        prev, frontier = frontier, nxt
-    owned.unpersist()
-    return dist
+            level = Observation()
+            nxt = (
+                sym.join(seen, F.col("s") == F.col("node"))
+                .groupBy("t")
+                .agg(F.max("f").alias("hf"))
+                # a left join that reads f (rather than a left_anti
+                # join, whose pruning would drop f) keeps both build
+                # sides identical, so the broadcast is reused
+                .join(seen, F.col("t") == F.col("node"), "left")
+                .where(F.col("hf") & F.col("f").isNull())
+                .select(F.col("t").alias("node"))
+                .observe(level, F.count(F.lit(1)).alias("n"))
+                .localCheckpoint(eager=True)
+            )
+            live.append(nxt)
+            n = level.get["n"]
+            if n == 0:
+                break
+            sizes.append(n)
+            if 1 + sum(sizes) == n_nodes:  # all settled: next level empty
+                break
+            if len(live) > 2:
+                _release(live.pop(0))
+            prev, frontier = frontier, nxt
+    finally:
+        for checkpoint in live:
+            _release(checkpoint)
+    return sizes

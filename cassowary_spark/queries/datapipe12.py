@@ -10,7 +10,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cassowary_spark.exprs import sql_srnd, srnd
+from cassowary_spark.exprs import literal_frame, sql_srnd, srnd
 from cassowary_spark.registry import query
 from cassowary_spark.tables import load_table
 
@@ -63,8 +63,8 @@ def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     same IEEE op sequence.
 
     Scale shape: digit extraction is row-local; the census is a
-    9-key partial-agg groupBy; expectations live in a 9-row VALUES
-    frame that broadcasts; the total rides a 1-row crossJoin. All
+    9-key partial-agg groupBy; expectations live in a 9-row JVM
+    literal frame; the total rides a 1-row crossJoin. All
     digits 1-9 are emitted even at zero observations (LEFT JOIN from
     the expectation side) so the χ² battery is always complete.
     """
@@ -77,8 +77,8 @@ def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     counts = digits.groupBy("d").agg(F.count("*").alias("n_obs"))
     tot = digits.agg(F.count("*").alias("n"))
-    exp = spark.createDataFrame(
-        [(d, _BENFORD[d]) for d in range(1, 10)], ["digit", "benford"]
+    exp = literal_frame(
+        spark, _BENFORD.items(), [("digit", "long"), ("benford", "double")]
     )
     joined = (
         exp.join(

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from cassowary_spark.exprs import sql_srnd, srnd
+from cassowary_spark.exprs import literal_frame, sql_srnd, srnd
 from cassowary_spark.operators.ranks import doubled_midranks
 from cassowary_spark.registry import query
 from cassowary_spark.tables import load_table
@@ -712,8 +712,10 @@ def q_spatial_grid_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("x div 25").alias("cx"),
         F.expr("y div 25").alias("cy"),
     )
-    offs = spark.createDataFrame(
-        [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)], ["dx", "dy"]
+    offs = literal_frame(
+        spark,
+        [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)],
+        [("dx", "long"), ("dy", "long")],
     )
     pr = pts.crossJoin(F.broadcast(offs)).select(
         F.col("id").alias("a_id"),

@@ -90,3 +90,58 @@ class TestShortestPath:
         assert out == exp
         assert out[0] == 1 and out[3] == 1 and out[-1] == 2
         assert 6 not in ref and sum(out.values()) == 7
+
+    def test_hop_cap_sends_far_nodes_to_minus_one(self, spark, tmp_path):
+        """Path 1-2-…-25, every edge at support 2: the hub is node 2,
+        so node 25 sits 23 hops out. Nodes beyond the 20-hop cap
+        (23, 24, 25) land in dist -1 via n_nodes - 1 - Σ level sizes."""
+        edges = [(i, i + 1) for i in range(1, 25)]
+        rows = []
+        for k, (a, b) in enumerate(edges * 2, 1):
+            rows.extend([(k, a), (k, b)])
+        sf = _write_lineitem(tmp_path, rows)
+        out = {
+            r["dist"]: r["n_parts"]
+            for r in QUERIES["q_shortest_path"](spark, sf).collect()
+        }
+        ref = _py_bfs(edges, 2, cap=20)
+        exp = {}
+        for d in ref.values():
+            exp[d] = exp.get(d, 0) + 1
+        exp[-1] = 25 - len(ref)
+        assert out == exp
+        assert max(out) == 20 and out[-1] == 3
+
+    def test_no_supported_pair_is_one_empty_unreached_row(
+        self, spark, tmp_path
+    ):
+        """No pair reaches support 2: the oracle's histogram is the
+        lone (-1, 0) row (no source, so no dist-0 row)."""
+        sf = _write_lineitem(tmp_path, [(1, 1), (1, 2), (2, 2), (2, 3)])
+        got = [tuple(r) for r in QUERIES["q_shortest_path"](spark, sf).collect()]
+        assert got == [(-1, 0)]
+
+    def test_leaves_no_persisted_rdds_and_reads_no_cache(self, spark, tmp_path):
+        """Path 1-…-5 from hub 2: every node is settled after level 3,
+        so the loop stops without running an empty level. Every BFS
+        checkpoint and the adjacency cache are released while the
+        query is built: build + collect (no clearCache in between) add
+        no persisted RDD, and the returned plan has no cached or
+        checkpointed leaf. (Ids may vanish meanwhile: the context
+        cleaner frees other tests' dead RDDs at any time.)"""
+        rows = []
+        for k, (a, b) in enumerate([(1, 2), (2, 3), (3, 4), (4, 5)] * 2, 1):
+            rows.extend([(k, a), (k, b)])
+        sf = _write_lineitem(tmp_path, rows)
+        jsc = spark.sparkContext._jsc
+
+        def persisted():
+            return set(jsc.getPersistentRDDs().keySet().toArray())
+
+        before = persisted()
+        df = QUERIES["q_shortest_path"](spark, sf)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" not in plan and "InMemoryRelation" not in plan
+        got = sorted(tuple(r) for r in df.collect())
+        assert got == [(-1, 0), (0, 1), (1, 2), (2, 1), (3, 1)]
+        assert persisted() <= before

@@ -520,8 +520,8 @@ class TestRound6OperatorReviewFixes:
     def test_bfs_empty_edges_raises(self, spark):
         import pytest as _pytest
 
-        from cassowary_spark.operators.graph import bfs_distances
+        from cassowary_spark.operators.graph import bfs_level_sizes
 
-        edges = spark.createDataFrame([], "x long, y long")
+        sym = spark.createDataFrame([], "s long, t long")
         with _pytest.raises(ValueError, match="edge set is empty"):
-            bfs_distances(edges)
+            bfs_level_sizes(sym, None, 0)

@@ -102,6 +102,27 @@ def test_no_row_at_a_time_python_anywhere(q):
         assert "BatchEvalPython" not in plan_of(df), name
 
 
+def test_no_python_backed_literal_frames():
+    # spark.createDataFrame on Python rows plans a parallelize scan, so
+    # every read of the frame starts Python-worker tasks; constant
+    # frames go through exprs.literal_frame instead. The one allowed
+    # use writes q_regex_serde's corrupt-line fixture once.
+    import pathlib
+
+    pkg = pathlib.Path(registry.__file__).parent
+    allowed = {("queries/scan.py", "q_regex_serde")}
+    found = set()
+    for sub in ("queries", "operators"):
+        for path in sorted((pkg / sub).rglob("*.py")):
+            fn = None
+            for line in path.read_text().splitlines():
+                if line.startswith("def "):
+                    fn = line[4:].split("(")[0]
+                if "spark.createDataFrame(" in line:
+                    found.add((path.relative_to(pkg).as_posix(), fn))
+    assert found <= allowed, sorted(found - allowed)
+
+
 def test_bucketed_join_is_shuffle_free(spark):
     """Bucketing co-locates both join sides (SCALE.md): writing fact
     and dim bucketed+sorted by the join key makes the sort-merge join
