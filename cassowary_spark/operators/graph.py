@@ -27,12 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-
-def _release(checkpoint: DataFrame) -> None:
-    """Drop a local checkpoint's blocks. ``DataFrame.unpersist`` does
-    nothing for a checkpoint: its data is the RDD behind the plan's
-    ``LogicalRDD`` leaf."""
-    checkpoint._jdf.logicalPlan().rdd().unpersist(False)
+from cassowary_spark.cache import release_checkpoint
 
 
 def bfs_level_sizes(
@@ -48,9 +43,9 @@ def bfs_level_sizes(
 
     ``sym`` is the symmetric adjacency ``(s long, t long)`` (every edge
     in both directions), ``repartition("t")``-ed and persisted by the
-    caller, who also unpersists it. ``source`` is a node of ``sym`` and
-    ``n_nodes`` its node count; once ``n_nodes`` are settled the next
-    level is known to be empty and is not run. An empty edge set
+    caller. ``source`` is a node of ``sym`` and ``n_nodes`` its node
+    count; once ``n_nodes`` are settled the next level is known to be
+    empty and is not run. An empty edge set
     (``n_nodes == 0``, so no source) raises ``ValueError``.
 
     Round k joins ``sym`` to the broadcast ``seen`` (levels k-1 and
@@ -99,9 +94,9 @@ def bfs_level_sizes(
             if 1 + sum(sizes) == n_nodes:  # all settled: next level empty
                 break
             if len(live) > 2:
-                _release(live.pop(0))
+                release_checkpoint(live.pop(0))
             prev, frontier = frontier, nxt
     finally:
         for checkpoint in live:
-            _release(checkpoint)
+            release_checkpoint(checkpoint)
     return sizes

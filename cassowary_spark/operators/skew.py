@@ -81,6 +81,6 @@ def spread_narrow_input(df: DataFrame, key_col: str) -> DataFrame:
         nparts = df.rdd.getNumPartitions()
     except Exception:  # pragma: no cover - defensive: planning failure
         return df
-    if nparts * 2 > target:  # already within 2x of the slot count
+    if nparts * 2 > target:  # the scan has more than half the slots
         return df
     return df.repartition(target, key_col)

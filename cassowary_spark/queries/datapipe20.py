@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cassowary_spark import cache
 from cassowary_spark.exprs import literal_frame
 from cassowary_spark.registry import query
 from cassowary_spark.tables import load_table
@@ -109,12 +110,12 @@ def q_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("m") >= _SP_SUPPORT)
         .select(F.col("x").cast("long").alias("s"), F.col("y").cast("long").alias("t"))
     )
-    sym = (
-        edges.unionAll(edges.select(F.col("t").alias("s"), F.col("s").alias("t")))
-        .repartition("t")
-        .persist()
-    )
-    try:
+    # the BFS reads sym while the query is built; the result does not
+    with cache.scope():
+        sym = cache.persist(
+            edges.unionAll(edges.select(F.col("t").alias("s"), F.col("s").alias("t")))
+            .repartition("t")
+        )
         deg = (
             sym.groupBy("t")
             .agg(F.count("*").alias("d"))
@@ -133,6 +134,4 @@ def q_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             levels = bfs_level_sizes(sym, deg["h"]["v"], n_nodes, _SP_MAX_HOPS)
             rows = [(0, 1), *enumerate(levels, 1), (-1, n_nodes - 1 - sum(levels))]
-    finally:
-        sym.unpersist()
     return literal_frame(spark, rows, [("dist", "int"), ("n_parts", "long")])

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cassowary_spark import cache
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.registry import query
 from cassowary_spark.tables import load_table
@@ -80,37 +81,31 @@ def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale) and C107's winsorized mean (robust location).
 
     Determinism: pairwise slopes are fixed IEEE ratios of exact
-    integer differences; the median is a row_number rank selection
-    at (N+1)//2 with identical doubles on both engines (duplicate
-    slope values are interchangeable at the selection boundary, so
-    the SELECTED VALUE is deterministic even where the ordering of
-    equal doubles is not); same for the residual median.
+    integer differences; the median is the value at sorted position
+    (N+1)//2, identical doubles on both engines (equal slopes are
+    interchangeable there); same for the residual median.
 
     Scale shape: the corpus collapses to the CALENDAR-BOUNDED daily
     agg first, so the O(n²) pair join is calendar², never corpus²
-    (~2.9M pairs at 2.4k days — a few MB of doubles); the rank
-    selection is a DISTRIBUTED order statistic (r15): range-partition
-    the slopes, rank locally per range bucket, and add the cumulative
-    bucket offsets — the k-th smallest falls out of one parallel sort
-    instead of the old single-partition row_number window, which
-    funneled every pair through one task (5.6× slower measured at
-    sf0.1, and the only not-embarrassingly-parallel step this query
-    had). The pair COUNT is C(n_days, 2) from the daily frame — exact,
-    no count-over-unbounded-window pass. Range boundaries come from
-    Spark's sampling and vary run to run, but the selected k-th VALUE
-    is a deterministic order statistic regardless of where the
-    boundaries land (equal keys are never split across buckets). On a
-    series long enough to break the calendar² bound, swap in the
-    standard sampled-pairs Theil-Sen — same shape over a hash-sampled
-    pair subset.
+    (~2.9M pairs at 2.4k days). The selection is a DISTRIBUTED order
+    statistic: a slope's bucket is the number of boundaries below it,
+    the boundaries being exact percentiles of a hash-selected 1/16
+    pair sample (one broadcast row); each bucket sorts its slopes and
+    the k-th smallest is read from the bucket whose cumulative count
+    first reaches k. A bucket is a function of the slope value alone,
+    so every materialization of the pairs assigns the same buckets
+    and the result depends on no cache. The pair COUNT is C(n_days, 2)
+    from the daily frame. On a series long enough to break the
+    calendar² bound, swap in the sampled-pairs Theil-Sen.
     """
-    daily = _daily(spark, sf_dir).persist()
+    daily = cache.persist(_daily(spark, sf_dir))
     a, b = daily.alias("a"), daily.alias("b")
     pairs = a.join(b, F.col("a.d") < F.col("b.d")).select(
         (
             (F.col("b.rev").cast("double") - F.col("a.rev").cast("double"))
             / (F.col("b.d").cast("double") - F.col("a.d").cast("double"))
-        ).alias("sl")
+        ).alias("sl"),
+        (F.pmod(F.xxhash64("a.d", "b.d"), F.lit(16)) == 0).alias("sampled"),
     )
     # np = n(n-1)/2 (strict d< d over distinct days) and the lower-
     # median rank k = (np+1) div 2, carried as a 1-row broadcast —
@@ -119,33 +114,33 @@ def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("nd * (nd - 1) div 2").alias("np"),
         F.expr("(nd * (nd - 1) div 2 + 1) div 2").alias("k"),
     )
-    nparts = spark.sparkContext.defaultParallelism
-    # persisted, NOT exchange-reuse: the local-rank and bucket-offset
-    # consumers must see the SAME partition-id assignment, and two
-    # materializations of a range exchange may not (sampled boundaries
-    # + per-consumer AQE reads). The frame is calendar²-bounded —
-    # ~n_days²/2 doubles regardless of corpus size — so the cache is
-    # corpus-independent; the bench/driver clearCache per rep owns it.
-    ranged = (
-        pairs.repartitionByRange(nparts, "sl")
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
+    nparts = max(2, spark.sparkContext.defaultParallelism)  # >= 1 boundary
+    bounds = pairs.filter("sampled").agg(
+        F.coalesce(
+            F.percentile("sl", [i / nparts for i in range(1, nparts)]),
+            F.array().cast("array<double>"),
+        ).alias("bounds")
     )
-    wloc = Window.partitionBy("pid").orderBy("sl")
-    loc = ranged.withColumn("lrk", F.row_number().over(wloc))
+    # one row per bucket holding its slopes sorted (the buckets sort in
+    # parallel); the k-th smallest sits in the bucket whose cumulative
+    # count first reaches k
+    pid = F.size(F.filter("bounds", lambda x: x < F.col("sl")))
     woff = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = (
-        ranged.groupBy("pid")
-        .agg(F.count("*").alias("c"))
-        .withColumn("off", F.coalesce(F.sum("c").over(woff), F.lit(0)))
-        .select("pid", "off")
+    buckets = (
+        pairs.crossJoin(F.broadcast(bounds))
+        .groupBy(pid.alias("pid"))
+        .agg(F.sort_array(F.collect_list("sl")).alias("sls"))
+        .withColumn("off", F.coalesce(F.sum(F.size("sls")).over(woff), F.lit(0)))
     )
     slope = (
-        loc.join(F.broadcast(offs), "pid")
-        .crossJoin(F.broadcast(meta))
-        .filter(F.col("lrk") + F.col("off") == F.col("k"))
+        buckets.crossJoin(F.broadcast(meta))
+        .filter(
+            (F.col("k") > F.col("off"))
+            & (F.col("k") <= F.col("off") + F.size("sls"))
+        )
         .select(
-            F.col("sl").alias("m"), F.col("np").cast("long").alias("n_pairs")
+            F.element_at("sls", (F.col("k") - F.col("off")).cast("int")).alias("m"),
+            F.col("np").cast("long").alias("n_pairs"),
         )
     )
     resid = daily.crossJoin(F.broadcast(slope)).select(
@@ -227,7 +222,7 @@ def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg, so the whole test is a join feeding a 1-row reduce; ties
     are a second tiny agg on the persisted daily frame.
     """
-    daily = _daily(spark, sf_dir).persist()
+    daily = cache.persist(_daily(spark, sf_dir))
     a, b = daily.alias("a"), daily.alias("b")
     s = a.join(b, F.col("a.d") < F.col("b.d")).agg(
         F.sum(

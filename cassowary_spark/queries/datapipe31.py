@@ -19,6 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cassowary_spark import cache
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.queries.tpch import _cents, _sql_cents
 from cassowary_spark.registry import query
@@ -353,15 +354,13 @@ def q_source_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select("source", "text")
     # persisted: the self-join's two sides AND the size table consume
     # this frame — un-persisted each would re-run the explode+distinct
-    # (cache lifetime is caller-owned, as in operators/dedup)
-    sh = (
+    sh = cache.persist(
         d.repartition(F.col("source"))
         .select(
             "source",
             F.explode(shingles("text", _SRC_SHINGLE_K)).alias("sh"),
         )
         .distinct()
-        .persist()
     )
     sizes = sh.groupBy("source").agg(F.count("*").alias("n"))
     a, b = sh.alias("a"), sh.alias("b")

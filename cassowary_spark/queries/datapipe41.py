@@ -18,6 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cassowary_spark import cache
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.registry import query
 from cassowary_spark.tables import fixture_cache_dir, load_table
@@ -273,7 +274,7 @@ def q_cem_att(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("s_c"),
     )
-    matched = cells.filter((F.col("n_t") > 0) & (F.col("n_c") > 0)).persist()
+    matched = cache.persist(cells.filter((F.col("n_t") > 0) & (F.col("n_c") > 0)))
     tot = matched.agg(F.sum("n_t").cast("long").alias("nt"))
     term = srnd(
         (F.col("n_t").cast("double") / F.col("nt").cast("double"))

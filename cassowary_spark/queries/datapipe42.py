@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cassowary_spark import cache
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.registry import query
 from cassowary_spark.tables import load_table
@@ -198,7 +199,8 @@ def q_simpson_flip(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.alias("t"),
         F.floor(F.col("value") * 100.0 + 0.5).cast("long").alias("cents"),
     )
-    cells = (
+    # |types| rows; pooled + strata reuse one scan
+    cells = cache.persist(
         e.groupBy("event_type")
         .agg(
             F.sum("t").cast("long").alias("n_t"),
@@ -210,7 +212,6 @@ def q_simpson_flip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("s_c"),
         )
-        .persist()  # |types| rows; pooled + strata reuse one scan
     )
     pooled = cells.agg(
         srnd(
@@ -319,9 +320,9 @@ def q_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         _HILL_K + 1
     )
     w = Window.orderBy(F.col("cents").desc(), F.col("event_id"))
-    top = sel.select(
+    top = cache.persist(sel.select(
         "cents", F.row_number().over(w).alias("rnk")
-    ).persist()  # k+1 rows; the kth pivot and the terms reuse it
+    ))  # k+1 rows; the kth pivot and the terms reuse it
     kth = top.filter(F.col("rnk") == _HILL_K + 1).select(
         F.col("cents").alias("ck")
     )

@@ -14,6 +14,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from cassowary_spark import cache
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
@@ -23,30 +25,16 @@ ORACLES: dict[str, str] = {}
 # returned by __spark_entry__.queries(). Python dicts preserve
 # insertion order, so ordered() controls the window.
 #
-# Round-7 rotation — adjudication-debt paydown, now SELF-MAINTAINING.
-# After round 6, 140 of 299 registry keys had never received a driver
-# CORRECTNESS row (the planted-gate-deferral policy, sensible at 112
-# keys, had deferred almost half the registry at 299). The round-6
-# verdict's top action: rotate the 50 OLDEST never-adjudicated keys
-# into the window, oldest-registered first, REGARDLESS of local
-# pytest coverage — the driver's environment has historically
-# surfaced divergences local runs did not (DuckDB DECIMAL overflow at
-# sf0.01, BFS plan-render OOM). ordered() now derives that rotation
-# from the committed CORRECTNESS_r*.json files directly, so each
-# round's window automatically advances past whatever the previous
-# round adjudicated; the r7 window is registration positions 0-49 of
-# the 140-key backlog (starting q_sstable_gen_diff, q_orc_roundtrip,
-# …, ending q_bm25, q_rank_fusion — including the rows-only family's
-# oracle-gated siblings q_simhash_dup/q_ann_lsh_planted/
-# q_ann_ivf_planted), the remaining 90 rotate in over rounds 8-9.
+# ordered() rotates the never-adjudicated keys into the window,
+# oldest-registered first, regardless of local pytest coverage (the
+# driver's environment has surfaced divergences local runs did not);
+# it reads the committed CORRECTNESS_r*.json files, so each window
+# advances past whatever the previous one adjudicated.
 #
 # DRIVER_PRIORITY is the MANUAL override lane only: list keys here
 # when they must (re-)confirm ahead of the rotation — e.g. a query
 # whose semantics changed after its last green row. Keys listed here
 # jump the queue; leave empty otherwise.
-# r12: empty — the r11 lane (the four rows-only-by-contract keys)
-# achieved its re-execution in the r11 window and was cleared per the
-# r11 verdict; rotation is back on pure oldest-first.
 DRIVER_PRIORITY: tuple[str, ...] = ()
 
 
@@ -172,12 +160,14 @@ def ordered(d: dict[str, "object"]) -> dict:
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register a query; ``oracle`` is DuckDB-runnable ANSI SQL or None
-    for genuinely non-SQL-expressible ops (rows-only check)."""
+    for genuinely non-SQL-expressible ops (rows-only check). What the
+    query persists is released when its result is dropped
+    (``cache.owned_by_result``)."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query key: {name}")
-        QUERIES[name] = fn
+        QUERIES[name] = fn = cache.owned_by_result(fn)
         if oracle is not None:
             ORACLES[name] = oracle
         return fn

@@ -112,11 +112,12 @@ def _edited_since(root: str, commit: str) -> set[str]:
 
 
 def _key_file(root: str, key: str) -> str | None:
-    """Repo-relative source file defining a registered query fn."""
+    """Repo-relative source file defining a registered query fn (the
+    registry stores a wrapper; its ``__code__`` lives in cache.py)."""
     import inspect
 
     try:
-        f = inspect.getsourcefile(registry.QUERIES[key])
+        f = inspect.getsourcefile(inspect.unwrap(registry.QUERIES[key]))
         return os.path.relpath(f, root) if f else None
     except (OSError, TypeError):
         return None

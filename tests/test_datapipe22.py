@@ -10,11 +10,15 @@ from __future__ import annotations
 
 import datetime as dt
 import math
+import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from cassowary_spark import registry
+from cassowary_spark.oracle import compare, duck_connection
+from cassowary_spark.plancheck import formatted_plan
 from cassowary_spark.registry import QUERIES
 
 registry.load_all()
@@ -127,6 +131,25 @@ class TestTheilSen:
         assert out3["n_pairs"] == n_pairs
         assert out3["ts_slope"] == m
         assert out3["ts_intercept"] == b
+
+
+@pytest.mark.parametrize("scale", ["sf0.001", "sf0.01"])
+def test_theil_sen_reads_no_cache(spark, sf_dir, scale):
+    """A slope's bucket is a function of its value, so the answer
+    cannot depend on a cache: it matches the oracle with the session
+    cache cleared between build and action, and the plan reads no
+    partition id."""
+    sf = os.path.join(os.path.dirname(sf_dir), scale)
+    if not os.path.isdir(sf):
+        pytest.skip(f"{sf} absent")
+    df = QUERIES["q_theil_sen"](spark, sf)
+    assert "SPARK_PARTITION_ID" not in formatted_plan(df).upper()
+    spark.catalog.clearCache()
+    con = duck_connection(sf)
+    try:
+        compare(df, registry.ORACLES["q_theil_sen"], con, "q_theil_sen")
+    finally:
+        con.close()
 
 
 class TestMannKendall:

@@ -123,6 +123,40 @@ def test_no_python_backed_literal_frames():
     assert found <= allowed, sorted(found - allowed)
 
 
+def test_cache_lifetime_has_one_owner():
+    # every persist goes through cache.persist, so the query that made
+    # it releases it with its result; a direct persist or release
+    # belongs only to cache.py and to the round loops of the iterative
+    # operators, which free each round's frame themselves
+    import pathlib
+    import re
+
+    direct = re.compile(r"(?<!\bcache)\.(persist\(|cache\(\))")
+    pkg = pathlib.Path(registry.__file__).parent
+    round_loops = {
+        ("operators/graph.py", "bfs_level_sizes"),
+        ("operators/dedup.py", "connected_components"),
+    }
+    persists, owned, unpersists = set(), set(), set()
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        fn = None
+        for line in path.read_text().splitlines():
+            if line.startswith("def "):
+                fn = line[4:].split("(")[0]
+            if "owned_caches" in line:
+                owned.add((rel, fn))
+            if rel == "cache.py":
+                continue
+            if direct.search(line):
+                persists.add((rel, fn))
+            if ".unpersist(" in line:
+                unpersists.add((rel, fn))
+    assert persists <= round_loops, sorted(persists - round_loops)
+    assert not owned, sorted(owned)
+    assert unpersists <= round_loops, sorted(unpersists - round_loops)
+
+
 def test_bucketed_join_is_shuffle_free(spark):
     """Bucketing co-locates both join sides (SCALE.md): writing fact
     and dim bucketed+sorted by the join key makes the sort-merge join

@@ -54,3 +54,21 @@ def test_window_leads_with_unadjudicated_keys():
     head, tail = rest[:n_unseen], rest[n_unseen:]
     assert head == sorted(head, key=reg_order.__getitem__)
     assert tail == sorted(tail, key=reg_order.__getitem__)
+
+
+def test_ledger_maps_a_key_to_its_own_module():
+    """The round-start staleness guard compares a key's defining file
+    with the files edited since the ship commit; the registered fn is
+    a cache-owning wrapper, so the file must come from the unwrapped
+    query, not the wrapper."""
+    import importlib.util
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "gen_adjudicated_snapshot",
+        os.path.join(root, "scripts", "gen_adjudicated_snapshot.py"),
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    assert mod._key_file(root, "q_theil_sen") == "cassowary_spark/queries/datapipe24.py"
